@@ -205,24 +205,20 @@ object Dedup {
     edges.flatMap(e => Seq(e._1, e._2)).distinct.map(v => (v, find(v)))
   }
 
-  /** Per-(session, sfDir) memo of the persisted LSH working set: the
-    * three dedup queries (minhash, clusters, keep) and repeated
+  /** Per-(session, key) memo of persisted working sets: the three
+    * dedup queries (minhash, clusters, keep) and repeated
     * Profile/Verify invocations all reuse ONE cached DataFrame
     * instead of registering a fresh CacheManager entry per call
     * (which would accumulate for the session's lifetime). If an
     * external `clearCache()` dropped the data, the same plan is
-    * re-persisted — still a single entry.
-    *
-    * Lifecycle: a memoized DataFrame strongly references its session,
-    * so weak-keying alone cannot collect entries (the value would pin
-    * the key). Every access (a) prunes entries whose context has
-    * stopped and (b) LRU-bounds the map to `sigSetMemoCap` entries —
-    * the evicted DataFrame is unpersisted, so a long session cycling
-    * through many (sfDir, n, k) working sets holds at most `cap`
-    * cache entries instead of growing without bound. Plan building
-    * happens OUTSIDE the lock (analysis + file listing can take
-    * seconds on remote storage); a lost race costs one redundant
-    * plan build, first-put wins. */
+    * re-persisted on its next access — still a single entry. The
+    * LRU bound unpersists the evicted frame, so a long session
+    * cycling through many working sets holds at most `cap` cache
+    * entries instead of growing without bound. Persist (a driver-side
+    * CacheManager registration, cheap) and unpersist both run under
+    * the memo's lock: persisting after release would race an eviction
+    * of the just-inserted entry and register an orphaned cache entry
+    * the memo no longer tracks. */
   // sized for TWO concurrent sfDirs' full working sets (16 keys each —
   // r21 adds the shared quality-score frame `qscore|<sfDir>` and the
   // basket-pair fan `itemsets-pairs|<sfDir>`:
@@ -234,25 +230,48 @@ object Dedup {
   // MemoPolicySpec pins the eviction/unpersist contract against this
   // cap.
   private[engine] val sigSetMemoCap = 36
-  private val sigSetMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String),
-      DataFrame]
+
+  /** A memoized working set plus its row count as observed by the
+    * eager materialization job (-1 until counted) — a SIZING side
+    * channel, not a result cache: consumers derive partition-count
+    * targets (the [[Tables.spreadTarget]] rule) from it without
+    * re-running a count over data the eager count just scanned. The
+    * count is a pure function of the key's inputs (same plan, same
+    * files), so it survives a re-persist. `unmaterialized` is set
+    * whenever the frame is (re-)persisted, and claimed by the one
+    * eager caller that then materializes it. */
+  private final class WorkingSet(val df: DataFrame) {
+    @volatile var rows = -1L
+    val unmaterialized = new java.util.concurrent.atomic.AtomicBoolean
+  }
+
+  private val sigSetMemo = new SessionMemo[WorkingSet](sigSetMemoCap,
+    onAccess = w =>
+      if (w.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+        w.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        w.unmaterialized.set(true)
+      },
+    onEvict = _.df.unpersist())
+
   /** Memoize-and-persist a derived working set, keyed by session +
     * string key — LRU-bounded, unpersist-on-eviction, re-persisting
-    * after an external `clearCache`. Shared by the minhash signature
-    * sets and the benchmark shingle set. */
-  /** `eager = true` (default) materializes the cache with one count
-    * job at build/re-persist time: a lazy persist whose first
-    * consumers are SIBLING AQE stages (both exchanges of a self-join,
-    * the per-iteration edge scans of an unrolled fixpoint) races —
-    * every sibling runs the full build concurrently ("Block already
-    * exists" churn), multiplying the heaviest pass (measured: the
+    * after an external `clearCache`. A key over fixture files embeds
+    * [[Tables.fileId]].
+    *
+    * `eager = true` materializes the cache with one count job at
+    * build/re-persist time: a lazy persist whose first consumers are
+    * SIBLING AQE stages (both exchanges of a self-join, the
+    * per-iteration edge scans of an unrolled fixpoint) races — every
+    * sibling runs the full build concurrently ("Block already exists"
+    * churn), multiplying the heaviest pass (measured: the
     * memo-consumer paired subset ran 0.94× geomean with eager on).
-    * Pass `eager = false` for memos consumed exactly once downstream
-    * (the ANN ranked-list chain) — there the count is a pure extra
-    * job per bench sample (q_ann_recall's 6-memo chain measured
-    * ~1.2× with a blanket eager). */
-  /** `compactRows >= 0` repartitions the CACHED frame to the
+    * One count materializes every partition once; consumers then
+    * read the cache. Pass `eager = false` for memos consumed exactly
+    * once downstream (the ANN ranked-list chain) — there the count is
+    * a pure extra job per bench sample (q_ann_recall's 6-memo chain
+    * measured ~1.2× with a blanket eager).
+    *
+    * `compactRows >= 0` repartitions the CACHED frame to the
     * row-derived partition target (the [[cachedSigSets]] sizing rule,
     * [[Tables.spreadTarget]]) before persisting: cached plans keep
     * their physical partitioning (AQE may not re-layout them —
@@ -266,97 +285,28 @@ object Dedup {
   private[engine] def memoizedPersisted(spark: SparkSession, keyStr: String,
       eager: Boolean = false, compactRows: Long = -1L)(
       build: => DataFrame): DataFrame = {
-    val key = (spark, keyStr)
-    // Persist (a driver-side CacheManager registration, cheap) happens
-    // INSIDE the lock: persisting after release would race an LRU
-    // eviction of the just-inserted entry — the evictor's unpersist
-    // would no-op on the not-yet-persisted df, then the late persist
-    // would register an orphaned cache entry the memo no longer
-    // tracks (exactly the leak this memo exists to prevent).
-    def touchAndPersist(k: (SparkSession, String)): Option[(DataFrame, Boolean)] =
-      // LinkedHashMap keeps INSERTION order — re-insert on access so
-      // the head is always the least-recently-used entry. The Boolean
-      // reports whether this access RE-persisted a dropped cache (an
-      // external clearCache) — the caller materializes it outside the
-      // lock, for the same racing-consumers reason as the first build.
-      sigSetMemo.remove(k).map { v =>
-        sigSetMemo.put(k, v)
-        val repersist =
-          v.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-        if (repersist)
-          v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (v, repersist)
-      }
-    val existing = sigSetMemo.synchronized {
-      sigSetMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      touchAndPersist(key)
+    val w = sigSetMemo(spark, keyStr) {
+      val b = build
+      val p = spark.sparkContext.defaultParallelism
+      val target = Tables.spreadTarget(p, compactRows, 512)
+      new WorkingSet(
+        if (compactRows >= 0 && target < p) b.repartition(target) else b)
     }
-    existing.map { case (v, repersisted) =>
-      if (repersisted && eager) recordCount(key, v.count())
-      v
-    }.getOrElse {
-      // plan building stays OUTSIDE the lock (analysis + file listing
-      // can take seconds); a lost race costs one redundant build
-      val built = {
-        val b = build
-        val p = spark.sparkContext.defaultParallelism
-        val target = Tables.spreadTarget(p, compactRows, 512)
-        if (compactRows >= 0 && target < p) b.repartition(target) else b
-      }
-      val winner = sigSetMemo.synchronized {
-        val w = touchAndPersist(key).map(_._1).getOrElse {
-          sigSetMemo.put(key, built)
-          built.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          built
-        }
-        while (sigSetMemo.size > sigSetMemoCap) {
-          val (ek, ev) = sigSetMemo.head
-          sigSetMemo.remove(ek)
-          if (!ek._1.sparkContext.isStopped) ev.unpersist()
-        }
-        w
-      }
-      // Materialize the fresh cache EAGERLY (outside the lock): a lazy
-      // persist whose first two consumers are sibling AQE shuffle
-      // stages (e.g. both exchanges of the LSH band self-join) races —
-      // BOTH stages run the full tokenize+minhash build concurrently
-      // ("Block already exists" churn), doubling the heaviest pass.
-      // One count materializes every partition once; consumers then
-      // read the cache. Cost: one extra job over the (already planned)
-      // working set — measured a net win on every multi-consumer memo
-      // (the band join's double compute gone). Correctness-neutral:
-      // same plan, same inputs, still recomputed from parquet after
-      // every clearCache.
-      if ((winner eq built) && eager) recordCount(key, winner.count())
-      winner
-    }
+    if (eager && w.unmaterialized.compareAndSet(true, false))
+      w.rows = w.df.count()
+    w.df
   }
 
-  /** Row counts observed by the memo's eager materialization jobs —
-    * a SIZING side channel, not a result cache: consumers use it to
-    * derive partition-count targets (the [[Tables.spreadTarget]]
-    * rule) without re-running a count job over data the eager count
-    * just scanned. The value is a pure function of the memo key's
-    * inputs (same build plan, same parquet), so reusing it across a
-    * re-persist cannot diverge; clearMemos drops it with the frame. */
-  private val memoCountMemo =
-    scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), Long]
-  private def recordCount(key: (SparkSession, String), n: Long): Unit =
-    memoCountMemo.synchronized {
-      memoCountMemo.put(key, n)
-      while (memoCountMemo.size > sigSetMemoCap * 2)
-        memoCountMemo.remove(memoCountMemo.head._1)
-    }
-  /** The recorded eager-count for a memo key, else the (cheap,
-    * cache-backed) count job. */
+  /** The recorded eager-count of a memoized working set, else the
+    * (cheap, cache-backed) count job. */
   private[engine] def memoizedRowCount(spark: SparkSession,
       keyStr: String, df: DataFrame): Long =
-    memoCountMemo.synchronized {
-      memoCountMemo.get((spark, keyStr))
-    }.getOrElse {
-      val n = df.count()
-      recordCount((spark, keyStr), n)
-      n
+    sigSetMemo.get(spark, keyStr) match {
+      case Some(w) if w.rows >= 0 => w.rows
+      case entry =>
+        val n = df.count()
+        entry.foreach(_.rows = n)
+        n
     }
 
   /** Drop and unpersist every memoized working set belonging to
@@ -368,23 +318,13 @@ object Dedup {
     * cold cost vs a genuine first run (ADVICE r10). Tools measuring
     * cold paths call this (plus [[Similarity.clearMemos]] /
     * [[Tables.clearMemos]]) instead. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    sigSetMemo.synchronized {
-      val keys = sigSetMemo.keys.filter(_._1 eq spark).toList
-      keys.foreach { k =>
-        sigSetMemo.remove(k).foreach { v =>
-          if (!spark.sparkContext.isStopped) v.unpersist(true)
-        }
-      }
-    }
-    memoCountMemo.synchronized {
-      memoCountMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-  }
+  private[graft] def clearMemos(spark: SparkSession): Unit =
+    sigSetMemo.clear(spark)
 
   private def cachedSigSets(spark: SparkSession, sfDir: String,
       n: Int, k: Int): DataFrame =
-    memoizedPersisted(spark, s"sigs|$sfDir|$n|$k", eager = true) {
+    memoizedPersisted(spark,
+      s"sigs|${Tables.fileId(spark, sfDir)}|$n|$k", eager = true) {
       val built = shingleSigSets(Tables(spark, sfDir, "documents"), n, k)
       // Compact the CACHED frame to a row-derived partition count (the
       // Tables.spreadTarget sizing rule): the tokenize+minhash build
@@ -530,7 +470,7 @@ object Dedup {
     // the consumed cache key): a second caller at a different t must
     // not reuse this prefix frame (ADVICE r21)
     prefixFilterPairs(spark, withSh.select(col("doc_id"), col("sh")), 0.8,
-        memoKey = Some(s"jacprefix|$sfDir|3|64|0.8"))
+        memoKey = Some(s"jacprefix|${Tables.fileId(spark, sfDir)}|3|64|0.8"))
       .orderBy(col("ida"), col("idb"))
   }
 
@@ -1340,8 +1280,9 @@ object Dedup {
     * the 1-row node count rides a broadcast cross join (the
     * `q_unigram_score` pattern), never a collect. */
   def qPagerank(spark: SparkSession, sfDir: String): DataFrame = {
+    val fid = Tables.fileId(spark, sfDir)
     val pairs = minhashPairs(spark, sfDir).select(col("ida"), col("idb"))
-    val e0 = memoizedPersisted(spark, s"pr-edges|$sfDir")(
+    val e0 = memoizedPersisted(spark, s"pr-edges|$fid")(
       pairs.select(col("ida").as("src"), col("idb").as("dst"))
         .unionByName(pairs.select(col("idb").as("src"), col("ida").as("dst"))))
     // fan-out follows edge volume, not cluster width (the
@@ -1352,14 +1293,14 @@ object Dedup {
     // 1M-edge graph still fans to every core
     val e = e0.coalesce(math.max(1, Tables.spreadTarget(
       spark.sparkContext.defaultParallelism,
-      memoizedRowCount(spark, s"pr-edges|$sfDir", e0), 512)))
+      memoizedRowCount(spark, s"pr-edges|$fid", e0), 512)))
     // deg and the node base are ITERATION-INVARIANT — persisted, or
     // every iteration re-plans their aggregates over e (measured: the
     // un-persisted form spent ~2× the query's own work re-running the
     // deg/count aggs and their exchanges three times each). deg rides
     // PRE-JOINED onto the edge list (also invariant), cutting each
     // iteration from two joins to one (r14: one fewer exchange/iter)
-    val edeg = memoizedPersisted(spark, s"pr-edeg|$sfDir")(
+    val edeg = memoizedPersisted(spark, s"pr-edeg|$fid")(
       e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")),
         Seq("src")))
     // r0 = S div n, carried per node so each iteration's teleport term
@@ -1369,7 +1310,7 @@ object Dedup {
     // loser here recomputes a node-sized frame from the already-
     // materialized edge cache, which is cheaper than an extra job
     // over the distinct+crossJoin build.
-    val nodesBase = memoizedPersisted(spark, s"pr-nodes|$sfDir")({
+    val nodesBase = memoizedPersisted(spark, s"pr-nodes|$fid")({
       val nodes = e.select(col("dst").as("node")).distinct()
       nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("n"))))
         .select(col("node"), expr(s"$pagerankScale div n").as("r0"))
@@ -1443,7 +1384,8 @@ object Dedup {
     * order holds ([[graft.tools.GraphScale]] measures the split).
     * Hot mid-nodes in the wedge join are AQE skew-split. */
   def qTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val e0 = memoizedPersisted(spark, s"pr-edges-canon|$sfDir", eager = true)(
+    val key = s"pr-edges-canon|${Tables.fileId(spark, sfDir)}"
+    val e0 = memoizedPersisted(spark, key, eager = true)(
       minhashPairs(spark, sfDir).select(col("ida"), col("idb")))
     // fan-out follows edge volume (the qPagerank coalesce rule): the
     // cached pairs frame keeps the verify join's full partitioning, so
@@ -1454,7 +1396,7 @@ object Dedup {
     // set still fans to every core.
     val e = e0.coalesce(math.max(1, Tables.spreadTarget(
       spark.sparkContext.defaultParallelism,
-      memoizedRowCount(spark, s"pr-edges-canon|$sfDir", e0), 512)))
+      memoizedRowCount(spark, key, e0), 512)))
     triangleCountsDeg(e).orderBy(col("doc_id"))
   }
 
@@ -1489,15 +1431,16 @@ object Dedup {
     * against visited — the Pregel BFS cost; the near-dup edge frame
     * is pairs-sized and shared (same persist key) with PageRank. */
   def qBfsHops(spark: SparkSession, sfDir: String): DataFrame = {
+    val fid = Tables.fileId(spark, sfDir)
     val pairs = minhashPairs(spark, sfDir).select(col("ida"), col("idb"))
-    val e = memoizedPersisted(spark, s"pr-edges|$sfDir")(
+    val e = memoizedPersisted(spark, s"pr-edges|$fid")(
       pairs.select(col("ida").as("src"), col("idb").as("dst"))
         .unionByName(pairs.select(col("idb").as("src"), col("ida").as("dst"))))
-    val seeds = memoizedPersisted(spark, s"bfs-seeds|$sfDir")(
+    val seeds = memoizedPersisted(spark, s"bfs-seeds|$fid")(
       e.select(col("src").as("node")).distinct()
         .filter(col("node") % bfsSeedMod === 0)
         .withColumn("dist", lit(0L)))
-    bfsFrom(e, seeds, bfsMaxHops, Some(s"bfs|$sfDir"))
+    bfsFrom(e, seeds, bfsMaxHops, Some(s"bfs|$fid"))
       .select(col("node").as("doc_id"), col("dist"))
       .orderBy(col("doc_id"))
   }
@@ -1676,8 +1619,9 @@ object Dedup {
 
   /** The verified near-dup pair set (unordered) — shared by
     * [[qDedupMinhash]] and the clustering pass [[qDedupClusters]]. */
-  private[engine] def minhashPairsKey(sfDir: String): String =
-    s"minhash-pairs|$sfDir|3|64|0.8"
+  private[engine] def minhashPairsKey(spark: SparkSession,
+      sfDir: String): String =
+    s"minhash-pairs|${Tables.fileId(spark, sfDir)}|3|64|0.8"
 
   def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
     // One tokenize pass produces shingle sets AND signatures (zero
@@ -1701,7 +1645,7 @@ object Dedup {
     // cached layout compacts to the row-derived target (documents
     // over-estimates the pair count; the guard only ever compacts
     // below the core count).
-    memoizedPersisted(spark, minhashPairsKey(sfDir),
+    memoizedPersisted(spark, minhashPairsKey(spark, sfDir),
       eager = true,
       compactRows = Tables.memoizedCount(spark, sfDir, "documents"))(
       minhashPairsOf(cachedSigSets(spark, sfDir, n = 3, k = 64)))
@@ -1958,7 +1902,7 @@ object Dedup {
     val pairs = minhashPairs(spark, sfDir).select(col("ida"), col("idb"))
     labelComponents(pairs, driverEdgeLimit,
       knownCountUpper = if (driverEdgeLimit < 0L) None
-        else Some(memoizedRowCount(spark, minhashPairsKey(sfDir), pairs)))
+        else Some(memoizedRowCount(spark, minhashPairsKey(spark, sfDir), pairs)))
       .select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .orderBy(col("doc_id"))
   }
@@ -1998,7 +1942,7 @@ object Dedup {
     // stored slice is <= all pairs; the merged input is <= label rows
     // (vertices <= 2|pairs|) + arriving (<= |pairs|) — coarse, but the
     // bound only picks the hybrid branch (exact labels either way)
-    val nPairs = memoizedRowCount(spark, minhashPairsKey(sfDir), pairs)
+    val nPairs = memoizedRowCount(spark, minhashPairsKey(spark, sfDir), pairs)
     val bucket = Tables.md5Bucket(col("ida"))
     val stored = labelComponents(pairs.filter(bucket < 90), 1000000L,
         knownCountUpper = Some(nPairs))
@@ -2107,7 +2051,8 @@ object Dedup {
     * that paid per-row ser/deser on the corpus-sized probe side.) */
   def qContaminationBloom(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables(spark, sfDir, "documents")
-    val bench = memoizedPersisted(spark, s"benchShingles|$sfDir", eager = true)(
+    val bench = memoizedPersisted(spark,
+      s"benchShingles|${Tables.fileId(spark, sfDir)}", eager = true)(
       shingleHashSets(d.filter(col("doc_id") < 10))
         .select(explode(col("sh")).as("shingle")).distinct())
     // size the sketch from the actual set (the count also materializes
@@ -2149,7 +2094,8 @@ object Dedup {
     val batchSource = "src0"
     // the batch participates three times (sketch sizing, sketch
     // build, anti-join) — memoized like the other shared working sets
-    val batch = memoizedPersisted(spark, s"incrBatch|$sfDir", eager = true)(
+    val batch = memoizedPersisted(spark,
+      s"incrBatch|${Tables.fileId(spark, sfDir)}", eager = true)(
       d.filter(col("source") === batchSource)
         .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp")))
     val history = d.filter(col("source") =!= batchSource)

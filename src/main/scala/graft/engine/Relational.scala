@@ -2195,7 +2195,8 @@ object Relational {
   def qRfmSharded(spark: SparkSession, sfDir: String): DataFrame = {
     val c = Tables(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val per = Dedup.memoizedPersisted(spark, s"rfmper|$sfDir", eager = true,
+    val per = Dedup.memoizedPersisted(spark,
+      s"rfmper|${Tables.fileId(spark, sfDir)}", eager = true,
       compactRows = Tables.memoizedCount(spark, sfDir, "customer"))(
       Tables(spark, sfDir, "orders")
         .groupBy(col("o_custkey"))
@@ -2222,7 +2223,8 @@ object Relational {
     // and any monotone bijection preserves the (value, custkey) rank.
     val axisVals = Seq(col("r_s"), col("f"),
       (col("m") * 10000).cast("long"))
-    val cuts = Scale.memoizedCutsMulti(spark, s"rfm3|$sfDir", 16,
+    val cuts = Scale.memoizedCutsMulti(spark,
+      s"rfm3|${Tables.fileId(spark, sfDir)}", 16,
       axisVals)(Scale.balancedCutsMulti(per, axisVals, 16))
     // m (double) rides along the exploded rows and pivots back out —
     // reconstructing it from the ×10⁴ long would be a double→long→
@@ -2272,7 +2274,8 @@ object Relational {
     val o = Tables(spark, sfDir, "orders")
       .select(col("o_orderpriority"), col("o_orderkey"),
         col("o_totalprice"))
-    val shard = Scale.memoizedShards(spark, s"pct|$sfDir", 16, col("o_totalprice"))(
+    val shard = Scale.memoizedShards(spark,
+      s"pct|${Tables.fileId(spark, sfDir)}", 16, col("o_totalprice"))(
       Scale.balancedShards(o, col("o_totalprice"), 16))
     val nPer = o.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("__n"))
@@ -2505,8 +2508,8 @@ object Relational {
     // and the per-basket edge regroup) and exchange reuse only shares
     // the upstream basket exchange, so the collect_set + explode
     // subtree re-ran per consumer (measured in the stage table).
-    val pairs = Dedup.memoizedPersisted(spark, s"itemsets-pairs|$sfDir",
-        eager = true)({
+    val pairs = Dedup.memoizedPersisted(spark,
+      s"itemsets-pairs|${Tables.fileId(spark, sfDir)}", eager = true)({
       // imperative per-partition fan (the shingleHashSets discipline):
       // the nested-transform HOF form is interpreted — the fan's two
       // stages measured ~7.5 s of summed task CPU at sf0.1 building
@@ -2759,7 +2762,8 @@ object Relational {
     * degrades to the constant shard instead of NPE'ing (r16
     * advisory). */
   def qGiniConcentration(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = Dedup.memoizedPersisted(spark, s"gini-users|$sfDir")(
+    val s = Dedup.memoizedPersisted(spark,
+      s"gini-users|${Tables.fileId(spark, sfDir)}")(
       Tables(spark, sfDir, "events")
         .groupBy(col("user_id"))
         .agg(sum(round(col("value") * 1000).cast("long")).as("s")))
@@ -3128,7 +3132,8 @@ object Relational {
     // predicate, so min(v) over kept rows is unchanged and the SAME
     // oracle arbitrates. The per-(flag, shard) carry agg DOES
     // map-side-reduce (48 cells), unlike the dropped (flag, v) one.
-    val shard = Scale.memoizedShards(spark, s"wmed|$sfDir", 16, col("v"))(
+    val shard = Scale.memoizedShards(spark,
+      s"wmed|${Tables.fileId(spark, sfDir)}", 16, col("v"))(
       Scale.balancedShards(li, col("v"), 16))
     // Distributed quickselect step (r22): only the CROSSING shard's
     // rows ever decide the median, so the corpus-sized prefix-sum

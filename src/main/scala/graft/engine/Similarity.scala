@@ -56,7 +56,7 @@ object Similarity {
     * cast + spread, and a cold `q_ann_recall` was paying it THREE
     * times (LSH index, IVF index, exact truth) before the memo. */
   private def corpus(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"corpus|$sfDir")(
+    Dedup.memoizedPersisted(spark, s"corpus|${Tables.fileId(spark, sfDir)}")(
       corpusPlan(spark, sfDir))
 
   /** The un-persisted corpus scan plan — shared by the [[corpus]]
@@ -242,33 +242,18 @@ object Similarity {
     * index build twice in overlapping jobs (measured, r10). 25 KB at
     * 50×64 doubles — same lifecycle discipline as the other driver
     * memos. */
-  private val queryVecMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), Seq[(Long, Seq[Double])]]
-  private val queryVecMemoCap = 8
+  private val queryVecMemo = new SessionMemo[Seq[(Long, Seq[Double])]](8)
   private def queryVecs(spark: SparkSession, sfDir: String,
       maxQid: Long): DataFrame = {
-    // Keyed by the RESOLVED file set (as Tables.spread keys its
-    // probe), not the directory string: collected rows are a hard
-    // snapshot — unlike the DataFrame memos they never re-read files
-    // on recompute, so a swapped-out parquet under the same sfDir
-    // must MISS here or query batches silently diverge from the
-    // corpus the other operators scan.
-    val files = corpusPlan(spark, sfDir).inputFiles.sorted.mkString("\n")
-    val key = (spark, s"$files|$maxQid")
-    val hit = queryVecMemo.synchronized {
-      queryVecMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      queryVecMemo.remove(key).map { v => queryVecMemo.put(key, v); v }
-    }
-    val rows = hit.getOrElse {
-      val r = corpusPlan(spark, sfDir).filter(col("vec_id") < maxQid)
-        .collect().toSeq.map(x => (x.getLong(0), x.getSeq[Double](1)))
-      queryVecMemo.synchronized {
-        queryVecMemo.put(key, r)
-        while (queryVecMemo.size > queryVecMemoCap)
-          queryVecMemo.remove(queryVecMemo.head._1)
+    // Collected rows are a hard snapshot — unlike the DataFrame memos
+    // they never re-read files on recompute — so the key's file
+    // identity is what keeps query batches in step with the corpus
+    // the other operators scan.
+    val rows =
+      queryVecMemo(spark, s"${Tables.fileId(spark, sfDir)}|$maxQid") {
+        corpusPlan(spark, sfDir).filter(col("vec_id") < maxQid)
+          .collect().toSeq.map(x => (x.getLong(0), x.getSeq[Double](1)))
       }
-      r
-    }
     import spark.implicits._
     rows.toDF("vec_id", "v")
   }
@@ -295,7 +280,7 @@ object Similarity {
     // memo key: a future caller with a different window must miss,
     // not be served a stale list
     val truth = Dedup.memoizedPersisted(spark,
-      s"truthlist|$sfDir|q$recallMaxQid|k$recallK")(
+      s"truthlist|${Tables.fileId(spark, sfDir)}|q$recallMaxQid|k$recallK")(
       exactTopK(annCorpus(spark, sfDir),
         queryVecs(spark, sfDir, recallMaxQid), k = recallK)
         .select(col("qid"), col("nid")))
@@ -545,11 +530,9 @@ object Similarity {
   /** Driver-side memo for the IVF coarse quantizer — the centroid
     * collect is a Spark job per call otherwise (every probe, every
     * Bench rep); it is a pure function of the corpus, so one fetch
-    * per (session, sfDir) suffices. Same lifecycle discipline as
-    * `Tables.spreadMemo`: stopped sessions pruned, LRU-bounded. */
-  private val ivfCentMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), Array[(Long, IndexedSeq[Double])]]
-  private val ivfCentMemoCap = 8
+    * per (session, corpus files) suffices. */
+  private val ivfCentMemo =
+    new SessionMemo[IndexedSeq[(Long, IndexedSeq[Double])]](8)
 
   /** IVF cell count for an n-vector corpus: ⌈√n⌉, floor 16, UNCAPPED —
     * probing nprobe cells then costs O(nprobe·n/√n) = O(nprobe·√n)
@@ -628,27 +611,15 @@ object Similarity {
     concat(v, array(lit(1.0)))
 
   /** The deterministic first-⌈√n⌉-vectors coarse quantizer, memoized
-    * per (session, sfDir). */
+    * per (session, corpus files). */
   private def ivfCentroids(spark: SparkSession, sfDir: String,
-      e: DataFrame, k: Int): IndexedSeq[(Long, IndexedSeq[Double])] = {
-    val key = (spark, sfDir)
-    val hit = ivfCentMemo.synchronized {
-      ivfCentMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      ivfCentMemo.remove(key).map { v => ivfCentMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val c = e.filter(col("vec_id") < k)
+      e: DataFrame, k: Int): IndexedSeq[(Long, IndexedSeq[Double])] =
+    ivfCentMemo(spark, Tables.fileId(spark, sfDir)) {
+      e.filter(col("vec_id") < k)
         .select(col("vec_id"), col("v")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq))
-        .sortBy(_._1)
-      ivfCentMemo.synchronized {
-        ivfCentMemo.put(key, c)
-        while (ivfCentMemo.size > ivfCentMemoCap)
-          ivfCentMemo.remove(ivfCentMemo.head._1)
-      }
-      c
-    }.toIndexedSeq
-  }
+        .sortBy(_._1).toIndexedSeq
+    }
 
   def qAnnIvf(spark: SparkSession, sfDir: String): DataFrame =
     ivfList(spark, sfDir).orderBy(col("qid"), col("rank"))
@@ -696,7 +667,7 @@ object Similarity {
         ivfCellCol(cent, forceLit = true).as("cid"))
       else annIndex(spark, sfDir)
     annIvfRank(spark, sfDir, e, assigned, cent, forceLit = forceLit,
-      memoSuffix = if (forceLit) None else Some(s"|$sfDir"))
+      memoSuffix = if (forceLit) None else Some(s"|${Tables.fileId(spark, sfDir)}"))
   }
 
   /** IVF with the coarse quantizer LLOYD-FITTED by the shared k-means
@@ -735,11 +706,12 @@ object Similarity {
       x => round(x * kmeansQuantUnit)))
     // the Lloyd quantizer's cells differ from the fused index's
     // first-k cells, so this path memoizes its OWN assignment frame
-    val assigned = Dedup.memoizedPersisted(spark, s"ivfassignedkm|$sfDir")(
+    val assigned = Dedup.memoizedPersisted(spark,
+      s"ivfassignedkm|${Tables.fileId(spark, sfDir)}")(
       e.select(col("vec_id"), col("v"),
         ivfCellCol(cent, v = vecQ).as("cid")))
     annIvfRank(spark, sfDir, e, assigned, cent, forceLit = false,
-      memoSuffix = Some(s"km|$sfDir"), vec = vecQ)
+      memoSuffix = Some(s"km|${Tables.fileId(spark, sfDir)}"), vec = vecQ)
       .orderBy(col("qid"), col("rank"))
   }
 
@@ -791,7 +763,7 @@ object Similarity {
     * are pipelined maps, never persisted), and probe scans read n
     * rows instead of 8n. */
   private def annIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"annindex|$sfDir") {
+    Dedup.memoizedPersisted(spark, s"annindex|${Tables.fileId(spark, sfDir)}") {
       val (cent, bits) = annIndexParams(spark, sfDir)
       corpusPlan(spark, sfDir).select(indexProjection(cent, bits): _*)
     }
@@ -979,7 +951,8 @@ object Similarity {
     // is the PUBLIC query's concern ([[qAnnLsh]])
     val ranked = topkRank(cand)
     if (forceLit) ranked
-    else Dedup.memoizedPersisted(spark, s"lshlist|$sfDir")(ranked)
+    else Dedup.memoizedPersisted(spark,
+      s"lshlist|${Tables.fileId(spark, sfDir)}")(ranked)
   }
 
   /** Shared similarity ranking tail: per-query top-k of the scored
@@ -1028,7 +1001,7 @@ object Similarity {
     * re-consumes it, and before the memo every audit run re-ran the
     * RRF agg+window on top of the memoized inputs). */
   private def fusedList(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"fusedlist|$sfDir") {
+    Dedup.memoizedPersisted(spark, s"fusedlist|${Tables.fileId(spark, sfDir)}") {
       val lsh = lshList(spark, sfDir)
         .select(col("qid"), col("nid"), col("rank"))
       val ivf = ivfList(spark, sfDir)
@@ -1151,50 +1124,25 @@ object Similarity {
     * (corpus, k, iters), and every production deployment fits them
     * once offline and serves many assignments (the exact posture the
     * IVF quantizer memo already takes). One fit per
-    * (session, sfDir, k, iters); values are k×dim doubles — tiny.
+    * (session, corpus files, k, iters); values are k×dim doubles.
     * Same lifecycle discipline as the other driver memos. */
-  private val kmeansCentMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), IndexedSeq[IndexedSeq[Double]]]
-  private val kmeansCentMemoCap = 8
+  private val kmeansCentMemo =
+    new SessionMemo[IndexedSeq[IndexedSeq[Double]]](8)
   private def kmeansCentroidsCached(spark: SparkSession, sfDir: String,
       k: Int, iters: Int, e: DataFrame,
-      n: Long): IndexedSeq[IndexedSeq[Double]] = {
-    val key = (spark, s"$sfDir|$k|$iters")
-    val hit = kmeansCentMemo.synchronized {
-      kmeansCentMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      kmeansCentMemo.remove(key).map { v => kmeansCentMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val c = kmeansCentroidsFrom(kmeansFitSample(e, k, n), k, iters)
-      kmeansCentMemo.synchronized {
-        kmeansCentMemo.put(key, c)
-        while (kmeansCentMemo.size > kmeansCentMemoCap)
-          kmeansCentMemo.remove(kmeansCentMemo.head._1)
-      }
-      c
-    }
-  }
+      n: Long): IndexedSeq[IndexedSeq[Double]] =
+    kmeansCentMemo(spark, s"${Tables.fileId(spark, sfDir)}|$k|$iters")(
+      kmeansCentroidsFrom(kmeansFitSample(e, k, n), k, iters))
 
   /** Drop every driver-side memo belonging to `spark` (query
-    * batches, IVF/k-means centroids) — the cold-measurement reset,
-    * paired with [[Dedup.clearMemos]]. These hold collected VALUES,
-    * not DataFrames, so `clearCache()` never touches them and a
-    * "cold" rep would otherwise skip the centroid fit / query
-    * collect a real first run pays. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    queryVecMemo.synchronized {
-      queryVecMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    ivfCentMemo.synchronized {
-      ivfCentMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    kmeansCentMemo.synchronized {
-      kmeansCentMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    pqBooksMemo.synchronized {
-      pqBooksMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-  }
+    * batches, IVF/k-means centroids, PQ codebooks) — the
+    * cold-measurement reset, paired with [[Dedup.clearMemos]]. These
+    * hold collected VALUES, not DataFrames, so `clearCache()` never
+    * touches them and a "cold" rep would otherwise skip the centroid
+    * fit / query collect a real first run pays. */
+  private[graft] def clearMemos(spark: SparkSession): Unit =
+    Seq(queryVecMemo, ivfCentMemo, kmeansCentMemo, pqBooksMemo)
+      .foreach(_.clear(spark))
 
   /** [[kmeansCentroids]] over an arbitrary (vec_id, v) corpus — the
     * seam the scale harness ([[graft.tools.SemScale]]) drives with
@@ -1255,7 +1203,7 @@ object Similarity {
     * it fully codegen'd. At 100 TB the lattice copy would be written
     * at ingest instead. */
   private def corpusQ(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"corpusq|$sfDir")(
+    Dedup.memoizedPersisted(spark, s"corpusq|${Tables.fileId(spark, sfDir)}")(
       corpusPlan(spark, sfDir).select(col("vec_id"),
         transform(col("v"), x => round(x * kmeansQuantUnit)).as("v")))
 
@@ -1330,25 +1278,14 @@ object Similarity {
     * to go rows-only again — [[requireQuantOracleRegime]] ENFORCES
     * the regime so a violation fails loudly instead of hash-diffing. */
   private def kmeansCentroidsQuantCached(spark: SparkSession,
-      sfDir: String, k: Int, iters: Int): IndexedSeq[IndexedSeq[Double]] = {
-    val key = (spark, s"quant|$sfDir|$k|$iters")
-    val hit = kmeansCentMemo.synchronized {
-      kmeansCentMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      kmeansCentMemo.remove(key).map { v => kmeansCentMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val e = corpusQ(spark, sfDir)
+      sfDir: String, k: Int, iters: Int): IndexedSeq[IndexedSeq[Double]] =
+    kmeansCentMemo(spark,
+        s"quant|${Tables.fileId(spark, sfDir)}|$k|$iters") {
       val n = corpusCount(spark, sfDir)
       requireQuantOracleRegime(n, k, "kmeansCentroidsQuantCached")
-      val c = kmeansCentroidsQuantFrom(kmeansFitSample(e, k, n), k, iters)
-      kmeansCentMemo.synchronized {
-        kmeansCentMemo.put(key, c)
-        while (kmeansCentMemo.size > kmeansCentMemoCap)
-          kmeansCentMemo.remove(kmeansCentMemo.head._1)
-      }
-      c
+      kmeansCentroidsQuantFrom(kmeansFitSample(corpusQ(spark, sfDir), k, n),
+        k, iters)
     }
-  }
 
   /** SemDeDup end-to-end: the semantic-dedup keep-list. k-means cells
     * bound the candidate space, exact cosine verifies within-cell
@@ -1727,29 +1664,16 @@ object Similarity {
     * [[kmeansCentMemo]] lifecycle. Values are m·ks·subdim doubles
     * (8 KB). Fits on the QUANTIZED corpus since r17 (the
     * oracle-backed lattice). */
-  private val pqBooksMemo = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, String), IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]
-  private val pqBooksMemoCap = 8
+  private val pqBooksMemo =
+    new SessionMemo[IndexedSeq[IndexedSeq[IndexedSeq[Double]]]](8)
   private[graft] def pqCodebooks(spark: SparkSession, sfDir: String)
-      : IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
-    val key = (spark, sfDir)
-    val hit = pqBooksMemo.synchronized {
-      pqBooksMemo.filterInPlace((kk, _) => !kk._1.sparkContext.isStopped)
-      pqBooksMemo.remove(key).map { v => pqBooksMemo.put(key, v); v }
-    }
-    hit.getOrElse {
+      : IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+    pqBooksMemo(spark, Tables.fileId(spark, sfDir)) {
       val n = corpusCount(spark, sfDir)
       requireQuantOracleRegime(n, pqCodebookSize, "pqCodebooks")
-      val c = pqCodebooksQuantFrom(
+      pqCodebooksQuantFrom(
         kmeansFitSample(corpusQ(spark, sfDir), pqCodebookSize, n), iters = 3)
-      pqBooksMemo.synchronized {
-        pqBooksMemo.put(key, c)
-        while (pqBooksMemo.size > pqBooksMemoCap)
-          pqBooksMemo.remove(pqBooksMemo.head._1)
-      }
-      c
     }
-  }
 
   /** The m-code PQ encoding of a vector — m independent per-subspace
     * L2 argmins against driver-resident codewords, ties to the
@@ -1793,7 +1717,7 @@ object Similarity {
     * [[graft.tools.AnnScale]]). Rides the fused index's one corpus
     * scan; memoized like the index itself. */
   private def pqIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.memoizedPersisted(spark, s"pqindex|$sfDir") {
+    Dedup.memoizedPersisted(spark, s"pqindex|${Tables.fileId(spark, sfDir)}") {
       val books = pqCodebooks(spark, sfDir)
       // encode in the codebooks' space — the quantized lattice —
       // derived inline from the fused index's raw vectors (a HOF;

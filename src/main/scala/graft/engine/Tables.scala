@@ -32,31 +32,42 @@ object Tables {
     * listing + footer/schema job PER CALL — StageProbe shows a
     * ~20 ms single-task `[parquet at Tables.scala]` stage in nearly
     * every query, and most queries load 1-3 tables — ~2-3 s per full
-    * bench pass re-reading footers that cannot change within a
-    * session. The cached value is the IMMUTABLE analyzed plan
-    * (ts-normalized), not data: every consumer still computes from
-    * the parquet bytes. [[clearMemos]] drops it with the other
-    * cold-measurement memos. */
-  private val tableMemo =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (SparkSession, String, String), DataFrame]
-  private val tableMemoCap = 64
+    * bench pass re-reading footers. The cached value is the analyzed
+    * plan (ts-normalized), not data: every consumer still computes
+    * from the parquet bytes. A parquet relation fixes its file list
+    * when created, so the key carries [[fileId]]: rows appended
+    * within the session miss here and load afresh. [[clearMemos]]
+    * drops it with the other cold-measurement memos. */
+  private val tableMemo = new SessionMemo[DataFrame](64)
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val key = (spark, sfDir, name)
-    val hit = tableMemo.synchronized {
-      tableMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      tableMemo.remove(key).map { v => tableMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val built = load(spark, sfDir, name)
-      tableMemo.synchronized {
-        tableMemo.put(key, built)
-        while (tableMemo.size > tableMemoCap)
-          tableMemo.remove(tableMemo.head._1)
-      }
-      built
-    }
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    tableMemo(spark, s"${fileId(spark, sfDir)}|$name")(
+      load(spark, sfDir, name))
+
+  /** The file identity of `dir`: its path plus a digest of the path,
+    * length and modification time of every file a parquet reader
+    * would see beneath it (Spark skips `_`/`.`-prefixed names) — THE
+    * staleness rule of every memo derived from files. A key that
+    * embeds it misses once any file under the directory is added,
+    * removed or rewritten. The listing is driver-side file-system
+    * metadata (no Spark job); a missing directory lists as empty. */
+  private[graft] def fileId(spark: SparkSession, dir: String): String = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }.flatMap(st => if (st.isDirectory) walk(st.getPath) else Seq(st))
+    val files =
+      try walk(root) catch { case _: java.io.FileNotFoundException => Nil }
+    val listing = files.map(st =>
+      s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}")
+      .sorted.mkString("\n")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(listing.getBytes("UTF-8"))
+    s"$dir@${md5.map(b => f"$b%02x").mkString}"
   }
 
   private def load(spark: SparkSession, sfDir: String,
@@ -106,10 +117,7 @@ object Tables {
     * projections layered above them. Plans with no file-based leaves
     * (in-memory test relations) are probed directly — planning a
     * LocalRelation is trivial. */
-  private val spreadMemo =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (SparkSession, String, Int), Int]
-  private val spreadMemoCap = 64
+  private val spreadMemo = new SessionMemo[Int](64)
 
   /** Fan-out target: all cores, floored so each task holds at least
     * `minRowsPerTask` rows (when the caller knows the cardinality).
@@ -165,22 +173,7 @@ object Tables {
       spark.sparkContext.defaultParallelism, rows, minRowsPerTask)
     val parts =
       if (files.isEmpty) df.rdd.getNumPartitions
-      else {
-        val key = (spark, fileKey, p)
-        val hit = spreadMemo.synchronized {
-          spreadMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-          spreadMemo.remove(key).map { v => spreadMemo.put(key, v); v }
-        }
-        hit.getOrElse {
-          val n = df.rdd.getNumPartitions
-          spreadMemo.synchronized {
-            spreadMemo.put(key, n)
-            while (spreadMemo.size > spreadMemoCap)
-              spreadMemo.remove(spreadMemo.head._1)
-          }
-          n
-        }
-      }
+      else spreadMemo(spark, s"$p|$fileKey")(df.rdd.getNumPartitions)
     // Hash-partition on a DETERMINISTIC key instead of round-robin
     // repartition(p): every keyless repartition first local-sorts its
     // input (spark.sql.execution.sortBeforeRepartition, on by default
@@ -216,58 +209,21 @@ object Tables {
     * and re-counting per invocation was one full-scan Spark job per
     * bench rep / verify pass on the most expensive queries. The count
     * is a pure function of the input files, so one job per
-    * (session, dir, table) suffices; values are 8-byte longs, so the
-    * LRU bound exists only to drop stopped-session keys. */
-  private val countMemo =
-    scala.collection.mutable.LinkedHashMap.empty[
-      (SparkSession, String, String), Long]
-  private val countMemoCap = 64
+    * (session, [[fileId]], table) suffices; values are 8-byte longs,
+    * so the LRU bound exists only to drop stopped-session keys. */
+  private val countMemo = new SessionMemo[Long](64)
   private[graft] def memoizedCount(spark: SparkSession, sfDir: String,
-      name: String): Long = {
-    val key = (spark, sfDir, name)
-    val hit = countMemo.synchronized {
-      countMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      countMemo.remove(key).map { v => countMemo.put(key, v); v }
-    }
-    hit.getOrElse {
-      val n = apply(spark, sfDir, name).count()
-      countMemo.synchronized {
-        countMemo.put(key, n)
-        while (countMemo.size > countMemoCap)
-          countMemo.remove(countMemo.head._1)
-      }
-      n
-    }
-  }
+      name: String): Long =
+    countMemo(spark, s"${fileId(spark, sfDir)}|$name")(
+      apply(spark, sfDir, name).count())
 
-  /** Drop the per-session count/spread probes — completes the
+  /** Drop the per-session table/count/spread memos — completes the
     * cold-measurement reset ([[Dedup.clearMemos]],
     * [[Similarity.clearMemos]]): a genuine first run pays the count
     * job and the partition probe too. */
-  private[graft] def clearMemos(spark: SparkSession): Unit = {
-    countMemo.synchronized {
-      countMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    spreadMemo.synchronized {
-      spreadMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-    tableMemo.synchronized {
-      tableMemo.filterInPlace((k, _) => k._1 ne spark)
-    }
-  }
+  private[graft] def clearMemos(spark: SparkSession): Unit =
+    Seq(countMemo, spreadMemo, tableMemo).foreach(_.clear(spark))
 
-  // Keyed per SparkSession (identity), not JVM-global: if the harness
-  // stops a session and builds a new one in the same JVM, the new
-  // session must be re-tuned (it would otherwise miss nanosAsLong and
-  // fail reading events.parquet with PARQUET_TYPE_ILLEGAL).
-  private val tunedSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Idempotent runtime tuning. These are all runtime-settable SQL
-    * confs, so they work regardless of how the harness built the
-    * session (Verify/Bench/tests all funnel through Tables).
-    */
   /** STATIC-conf companion to [[tune]] (static confs must be set on
     * the builder, before the session exists): the generated-class
     * cache (`spark.sql.codegen.cache.maxEntries`) defaults to 100
@@ -306,8 +262,18 @@ object Tables {
   val shuffleSortBypassMergeThreshold: Int =
     sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1").toInt
 
+  // Keyed per SparkSession (identity), not JVM-global: if the harness
+  // stops a session and builds a new one in the same JVM, the new
+  // session must be re-tuned (it would otherwise miss nanosAsLong and
+  // fail reading events.parquet with PARQUET_TYPE_ILLEGAL).
+  private val tunedSessions = new SessionMemo[Unit](64)
+
+  /** Idempotent runtime tuning. These are all runtime-settable SQL
+    * confs, so they work regardless of how the harness built the
+    * session (Verify/Bench/tests all funnel through Tables).
+    */
   def tune(spark: SparkSession): Unit = synchronized {
-    if (!tunedSessions.contains(spark)) {
+    tunedSessions(spark, "") {
       val c = spark.conf
       // AQE: runtime partition coalescing + skew-join splitting; at
       // 100 TB this is what keeps post-shuffle partitions sized right.
@@ -367,7 +333,6 @@ object Tables {
           spark.experimental.extraOptimizations :+
             graft.plans.RewriteDotProduct
       }
-      tunedSessions.add(spark)
     }
   }
 }

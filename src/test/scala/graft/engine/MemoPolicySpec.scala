@@ -1,6 +1,7 @@
 package graft.engine
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** The session working-set memo's eviction CONTRACT
@@ -9,7 +10,9 @@ import org.apache.spark.storage.StorageLevel
   * inventory is enumerated at the cap's declaration); this spec
   * guards the policy for whoever adds a working set or a 3rd
   * concurrent dir. Written against [[Dedup.sigSetMemoCap]] itself so
-  * a resize keeps the contract checked, not the constants. */
+  * a resize keeps the contract checked, not the constants. Plus the
+  * staleness rule every file-derived memo shares ([[Tables.fileId]]):
+  * rows appended within a session are never served stale. */
 class MemoPolicySpec extends SparkSpec {
   import spark.implicits._
 
@@ -60,5 +63,33 @@ class MemoPolicySpec extends SparkSpec {
     // dA's head was evicted, and evicted means unpersisted, not orphaned
     assert(byDir("dA").take(nEvicted)
       .forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("append-then-requery: fresh rows, fresh count, fresh centroid-backed query") {
+    val dir = tmpDir("memo-append")
+    val path = s"$dir/embeddings.parquet"
+    val fixture = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    fixture.write.parquet(path)
+    val query = graft.SparkEntry.queries("q_ann_ivf")
+    def run() = query(spark, dir).collect().map(_.toString).sorted.toSeq
+    val n0 = Tables(spark, dir, "embeddings").count()
+    assert(Tables.memoizedCount(spark, dir, "embeddings") == n0)
+    val before = run()
+    // copies of the query vectors under fresh ids: every query's exact
+    // nearest neighbour, so a result computed over the grown corpus
+    // must rank them (the corpus count also sizes the IVF quantizer)
+    val extra = fixture.filter(col("vec_id") < Similarity.recallMaxQid)
+      .withColumn("vec_id", col("vec_id") + 1000000L)
+    val added = extra.count()
+    extra.write.mode("append").parquet(path)
+    assert(Tables(spark, dir, "embeddings").count() == n0 + added)
+    assert(Tables.memoizedCount(spark, dir, "embeddings") == n0 + added)
+    val after = run()
+    spark.catalog.clearCache()
+    Tables.clearMemos(spark)
+    Dedup.clearMemos(spark)
+    Similarity.clearMemos(spark)
+    assert(after == run(), "memoized re-query differs from a cold re-query")
+    assert(after != before, "appended rows did not reach the query")
   }
 }
