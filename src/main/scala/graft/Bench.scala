@@ -115,28 +115,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf — see Tables.codegenCacheMaxEntries (the default
-      // 100-entry generated-class cache thrashes across an
-      // interleaved suite pass, re-paying Janino compiles the warmup
-      // pass already did; measured −23% on a 40-query subset)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.engine.Tables.codegenCacheMaxEntries.toString)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        graft.engine.Tables.shuffleSortBypassMergeThreshold.toString)
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // bounded-frame windows are audited (see KNOWN-BOUNDED sites);
-    // keep their single-partition WARN out of the round artifacts
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val cpus = spark.sparkContext.defaultParallelism
 
     // Optional subset filter (dev loops + the paired A/B harness,
     // which reruns a shared subset under two jars): headline order is
@@ -149,11 +130,13 @@ object Bench {
 
     // A failed query is a sentinel (-1 in the per-query map, name in
     // "failed", total forced negative) — a crash must never read as a
-    // speedup. Cached intermediates (e.g. the shared minhash working
-    // set) are dropped before EVERY sample, not just at pass
-    // boundaries: queries that share a memoized input (minhash /
-    // clusters) must each pay its full cost or a regression in the
-    // shared stage would be invisible in the later query's number.
+    // speedup. Cached working sets (e.g. the shared minhash
+    // signatures) are dropped before EVERY sample, not just at pass
+    // boundaries: queries that share one (minhash / clusters) each
+    // recompute it, so a regression in the shared stage shows in the
+    // later query's number. Only `clearCache()` runs: the value memos
+    // (tables, counts, spread probes, centroids, codebooks, shard
+    // cuts) carry over from warm-up, so samples time them warm.
     def runOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         dir: String): Double = {

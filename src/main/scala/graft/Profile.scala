@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time one (or all headline) queries repeatedly and dump
   * the formatted physical plan, for plan-shape iteration outside the
   * full Bench run. Usage:
@@ -12,25 +10,8 @@ object Profile {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val which = if (args.length > 1) Some(args(1)) else None
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf — see Tables.codegenCacheMaxEntries
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.engine.Tables.codegenCacheMaxEntries.toString)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        graft.engine.Tables.shuffleSortBypassMergeThreshold.toString)
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // bounded-frame windows are audited (see KNOWN-BOUNDED sites);
-    // keep their single-partition WARN out of the round artifacts
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
 
     val names = which.map(Seq(_)).getOrElse(Bench.headline)
     names.foreach { n =>
@@ -40,8 +21,9 @@ object Profile {
       // needs more than one execution before C2 finishes compiling
       // the hot loops — a single warmup leaves the first timed reps
       // descending), then clearCache before every timed rep so
-      // queries sharing a memoized input (minhash working set) each
-      // pay its full cost. Median is the headline
+      // queries sharing a cached working set (minhash signatures)
+      // each recompute it; as in Bench, the value memos carry over
+      // from warm-up. Median is the headline
       // (contention-robust); min and the raw samples are printed
       // alongside.
       val times = (-1 to reps).map { _ =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,26 +9,8 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf — see Tables.codegenCacheMaxEntries
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.engine.Tables.codegenCacheMaxEntries.toString)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        graft.engine.Tables.shuffleSortBypassMergeThreshold.toString)
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // WindowExec's single-partition WARN: every unpartitioned window in
-    // the engine runs on an audited bounded frame (shard carries, k+1
-    // priority rows, |langs| codes — see the KNOWN-BOUNDED comments at
-    // each site), so the warning is pure noise in the round artifacts.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     // Per-query watchdog: run each dump on a daemon thread with a hard
     // time budget, so ONE pathological query (the r15 find: a plan-time

@@ -3,7 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loaders for the driver-generated test data
-  * (TESTDATA.md) plus per-session runtime tuning.
+  * (TESTDATA.md), the one session builder and per-session runtime
+  * tuning.
   *
   * Scale notes: every reader goes through `spark.read.parquet` so
   * Catalyst handles column pruning + predicate pushdown into the
@@ -224,43 +225,81 @@ object Tables {
   private[graft] def clearMemos(spark: SparkSession): Unit =
     Seq(countMemo, spreadMemo, tableMemo).foreach(_.clear(spark))
 
-  /** STATIC-conf companion to [[tune]] (static confs must be set on
-    * the builder, before the session exists): the generated-class
-    * cache (`spark.sql.codegen.cache.maxEntries`) defaults to 100
-    * entries per JVM — far below one interleaved pass of the query
-    * suite (~85 headline queries × 10-20 codegen units each), so
-    * every bench sample re-paid Janino compilation for classes the
-    * warmup had already compiled and the cache had already evicted.
-    * Measured (r21, 40-query × 3-rep interleaved subset, paired
-    * same-box runs): default 47.5 / 47.3 s vs 4096-entry 36.3 s
-    * (10k-entry 34.1 / 39.6 s — no further win past 4096). This is
-    * NOT a local[32]-only win: production executors are long-lived
-    * JVMs serving hundreds of distinct codegen units across a job
-    * DAG, and each eviction re-pays a 10-100 ms compile inside task
-    * execution; 4096 × ~50 KB of class metadata bounds the metaspace
-    * cost at a few hundred MB. Every graft entry point's builder
-    * sets this (Bench/Verify/Profile/StageProbe/jobs). */
-  val codegenCacheMaxEntries: Int = 4096
+  /** The one session builder. Bench, Verify, Profile, the jobs, the
+    * tools and the test suite all start from it, so each runs the
+    * engine Bench measures; a caller adds only the confs it needs
+    * (a Hive catalog, a pinned master) before `getOrCreate`. It holds
+    * the STATIC confs, which must be set before the session exists;
+    * the runtime confs live in [[tune]], which stays lazy (the first
+    * [[apply]] runs it; the streaming jobs never do).
+    *
+    * `spark.sql.codegen.cache.maxEntries` = 4096: the generated-class
+    * cache defaults to 100 entries per JVM — far below one
+    * interleaved pass of the query suite (~85 headline queries ×
+    * 10-20 codegen units each), so every bench sample re-paid Janino
+    * compilation for classes the warmup had already compiled and the
+    * cache had already evicted. Measured (r21, 40-query × 3-rep
+    * interleaved subset, paired same-box runs): default 47.5 / 47.3 s
+    * vs 4096-entry 36.3 s (10k-entry 34.1 / 39.6 s — no further win
+    * past 4096). This is NOT a local[32]-only win: production
+    * executors are long-lived JVMs serving hundreds of distinct
+    * codegen units across a job DAG, and each eviction re-pays a
+    * 10-100 ms compile inside task execution; 4096 × ~50 KB of class
+    * metadata bounds the metaspace cost at a few hundred MB.
+    *
+    * `spark.shuffle.sort.bypassMergeThreshold` = 1 (r22): the default
+    * of 200 sends EVERY exchange of a 32-core local session
+    * (shuffle.partitions = cores ≤ 200) through the bypass-merge
+    * writer — each map task opens one file PER REDUCE PARTITION
+    * (open + lz4 stream init + flush + close + concatenation), a
+    * ~30-100 ms fixed cost per map task that OpProbe measured as
+    * 0.4-3.2 s of summed shuffleWriteTime on KB-sized exchanges (the
+    * rfm/jaccard memo-compaction exchanges wrote 28-376 KB for
+    * 1.6-3.2 s of write time). A threshold of 1 routes every exchange
+    * through the serialized UnsafeShuffleWriter (UnsafeRow supports
+    * relocation): one spill file + index per map task regardless of
+    * reduce count. This ALIGNS local behavior with production rather
+    * than diverging from it — at cluster scale shuffle.partitions ≫
+    * 200, so the serialized writer is what runs anyway; the bypass
+    * path only ever fires on small-reduce-count shuffles where its
+    * per-file cost is the documented loss.
+    *
+    * Under spark-submit the master arrives as the `spark.master`
+    * system property. A bare `runMain` (dev, bench, tests, tools) has
+    * none, so the session runs `local[SPARK_GRAFT_CPUS]` (default: all
+    * cores) with one shuffle partition per core and no UI —
+    * SPARK_GRAFT_CPUS is the only core-count rule. */
+  def builder(appName: String): SparkSession.Builder = {
+    silenceBoundedWindows()
+    val b = SparkSession.builder().appName(appName)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+    if (sys.props.contains("spark.master")) b
+    else {
+      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors().toString)
+      b.master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.ui.enabled", "false")
+    }
+  }
 
-  /** STATIC-conf companion #2 (r22): `spark.shuffle.sort.
-    * bypassMergeThreshold` defaults to 200, so on a 32-core local
-    * session EVERY exchange (shuffle.partitions = cores ≤ 200) takes
-    * the bypass-merge writer — each map task opens one file PER
-    * REDUCE PARTITION (open + lz4 stream init + flush + close +
-    * concatenation), a ~30-100 ms fixed cost per map task that
-    * OpProbe measured as 0.4-3.2 s of summed shuffleWriteTime on
-    * KB-sized exchanges (the rfm/jaccard memo-compaction exchanges
-    * wrote 28-376 KB for 1.6-3.2 s of write time). Setting the
-    * threshold to 1 routes every exchange through the serialized
-    * UnsafeShuffleWriter (UnsafeRow supports relocation): one spill
-    * file + index per map task regardless of reduce count. This
-    * ALIGNS local behavior with production rather than diverging
-    * from it — at cluster scale shuffle.partitions ≫ 200, so the
-    * serialized writer is what runs anyway; the bypass path only
-    * ever fires on small-reduce-count shuffles where its per-file
-    * cost is the documented loss. */
-  val shuffleSortBypassMergeThreshold: Int =
-    sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1").toInt
+  /** Every unpartitioned window in the engine runs on an audited
+    * bounded frame (shard carries, k+1 priority rows, |langs| codes —
+    * the KNOWN-BOUNDED comments at each site), so WindowExec's
+    * single-partition WARN is pure noise; a constant partition key
+    * cannot silence it (Spark 4's EliminateWindowPartitions folds it
+    * away again). The level is JVM-global. Spark's own log set-up
+    * replaces an unconfigured log4j context on first use, which would
+    * drop a level set before it, so that set-up runs first. */
+  private def silenceBoundedWindows(): Unit = {
+    new org.apache.spark.internal.Logging {
+      initializeLogIfNecessary(false)
+    }
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+  }
 
   // Keyed per SparkSession (identity), not JVM-global: if the harness
   // stops a session and builds a new one in the same JVM, the new
@@ -306,20 +345,18 @@ object Tables {
       // 147k-group basket agg after AQE coalescing, or corpus-scale
       // aggs) still switch to the spill-safe sort path, which a
       // 3-round factor A/B measured as no worse than the giant hash
-      // map on exactly those aggs (q_copurchase). Env-overridable for
-      // cluster tuning.
+      // map on exactly those aggs (q_copurchase).
       c.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK",
-          (1 << 16).toString))
+        (1 << 16).toString)
       // events.parquet stores TIMESTAMP(NANOS,false) which the vectorized
       // reader rejects ([PARQUET_TYPE_ILLEGAL]); read as Long and convert.
       c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // The NTZ->TimestampType normalization in `table` above is only
       // bit-equivalent to the nanos path when the session zone is UTC.
-      // Each entry point (Bench/Verify/tests) sets it too, but the
-      // invariant belongs at the same choke point as nanosAsLong so a
-      // session built elsewhere can't silently shift every event
-      // timestamp relative to the DuckDB oracle.
+      // The sbt build and perfbench also pass it as a JVM system
+      // property, but the invariant belongs at the same choke point as
+      // nanosAsLong so a session launched another way can't silently
+      // shift every event timestamp relative to the DuckDB oracle.
       c.set("spark.sql.session.timeZone", "UTC")
       // native functions (SQL name graft_dot); cluster deployments can
       // instead set spark.sql.extensions=graft.functions.GraftExtensions

@@ -76,25 +76,10 @@ object JobConfig {
 
 /** Shared job scaffolding: session, source, trigger. */
 object Jobs {
-  /** Under spark-submit the master arrives as the `spark.master`
-    * system property; a bare `runMain` (dev/bench) has none, so fall
-    * back to local[SPARK_GRAFT_CPUS] with matching shuffle
-    * parallelism — the Bench/Verify convention. */
+  /** The job session: [[graft.engine.Tables.builder]] (static confs,
+    * master fallback) plus an optional Hive catalog. */
   def session(appName: String, hive: Boolean = false): SparkSession = {
-    var b = SparkSession.builder().appName(appName)
-      // static conf — see Tables.codegenCacheMaxEntries (long-lived
-      // job JVMs serve hundreds of distinct codegen units; the
-      // 100-entry default re-pays Janino compiles on eviction)
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.engine.Tables.codegenCacheMaxEntries.toString)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        graft.engine.Tables.shuffleSortBypassMergeThreshold.toString)
-    if (!sys.props.contains("spark.master")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-      b = b.master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    }
+    val b = graft.engine.Tables.builder(appName)
     (if (hive) b.enableHiveSupport() else b).getOrCreate()
   }
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: isolate WHERE the per-task fixed cost of a tiny ANN
@@ -18,13 +17,7 @@ object AggProbe {
   def main(args: Array[String]): Unit = {
     val parts = if (args.length > 0) args(0).toInt else 8
     val reps = if (args.length > 1) args(1).toInt else 7
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-agg-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

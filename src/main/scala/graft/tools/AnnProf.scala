@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: decompose the cold `q_ann_recall` cost stage by
   * stage. One cold sequence runs the ANN queries WITHOUT clearing
   * caches in between, so each increment isolates one memoized stage:
@@ -15,14 +13,7 @@ object AnnProf {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-ann-prof").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val seq = Seq("q_ann_lsh", "q_ann_ivf", "q_ann_fused", "q_ann_recall")

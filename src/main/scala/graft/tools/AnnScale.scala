@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale evidence for the round-8 n-derived ANN index granularity
@@ -83,17 +82,12 @@ object AnnScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 1000000L
     val nQueries = 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-ann-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
-    val e = spark.range(0L, n, 1L, cpus.toInt).as[Long]
+    val e = spark.range(0L, n, 1L, cpus).as[Long]
       .mapPartitions(_.map(id => (id, vecOf(id).toSeq)))
       .toDF("vec_id", "v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

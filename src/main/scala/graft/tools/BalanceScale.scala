@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for the r17 quantile-balanced shard boundaries
@@ -36,19 +35,15 @@ object BalanceScale {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.engine.Tables.builder("graft-balance-scale")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     // Zipf spend: rank = a hash permutation of id (input unsorted),
     // s(rank) = 1e12 / rank — whale row 1e12, tail rows ~50k at 20M
-    val df = spark.range(0L, n, 1L, cpus.toInt).as[Long]
+    val df = spark.range(0L, n, 1L, cpus).as[Long]
       .mapPartitions(_.map { id =>
         val rank = java.lang.Long.remainderUnsigned(mix(id), n) + 1L
         (id, 1000000000000L / rank)

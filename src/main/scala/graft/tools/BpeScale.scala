@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for the BPE scale shape — two experiments in one
@@ -83,18 +82,13 @@ object BpeScale {
     val nDocs = if (args.length > 0) args(0).toInt else 100000
     val nMerges = if (args.length > 1) args(1).toInt else 16
     val vocab = if (args.length > 2) args(2).toInt else 10000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-bpe-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     val vs = vocab
-    val docs = spark.range(0L, nDocs.toLong, 1L, cpus.toInt)
+    val docs = spark.range(0L, nDocs.toLong, 1L, cpus)
       .as[Long].mapPartitions { it =>
         it.map { d =>
           val sb = new StringBuilder

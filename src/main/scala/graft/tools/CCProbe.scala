@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: where does `q_dedup_clusters_dist` spend its time —
@@ -14,13 +13,7 @@ object CCProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-cc-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time[T](name: String)(f: => T): T = {

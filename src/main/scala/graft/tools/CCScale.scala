@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Dedup
-import org.apache.spark.sql.SparkSession
 
 /** Dev evidence for the O(log n) connected-components claim: builds a
   * CHAIN of n vertices with shuffled ids — the worst case for
@@ -14,20 +13,15 @@ import org.apache.spark.sql.SparkSession
 object CCScale {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 100000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-cc-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     val rnd = new scala.util.Random(11L)
     val ids = rnd.shuffle((0L until n.toLong).toVector)
     val edges = spark.sparkContext
-      .parallelize(ids.sliding(2).map(s => (s(0), s(1))).toSeq, cpus.toInt)
+      .parallelize(ids.sliding(2).map(s => (s(0), s(1))).toSeq, cpus)
       .toDF("ida", "idb")
     val t0 = System.nanoTime()
     val (labels, rounds) = Dedup.connectedComponents(edges)

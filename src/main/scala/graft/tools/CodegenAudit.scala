@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-close codegen audit: runs every headline query at the given
   * SF and reports any whole-stage-codegen compile failure (Spark
   * silently degrades to interpreted execution on Janino errors, so a
@@ -14,11 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CodegenAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.engine.Tables.builder("graft-codegen-audit")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for the fuzzy-join (record linkage) scale shape at
@@ -91,13 +90,7 @@ object FuzzyScale {
 
   def main(args: Array[String]): Unit = {
     val nRows = if (args.nonEmpty) args(0).toInt else 200000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-fuzzy-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.StreamingOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for the CDC-upsert scale shape: bootstrap a base far
@@ -35,13 +34,7 @@ object MergeScale {
     // collapse onto key 0 and the closed-form checksums are wrong by
     // construction, so fail with an argument error, not a checksum one
     require(rows >= 4096, s"rows=$rows too small: need >= 4096")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-merge-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -46,21 +45,13 @@ object MixScale {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-mix-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     // planted skew: source "mega" holds 95%, nine boutiques share 5%
-    val base = spark.range(0L, n, 1L, cpus.toInt).as[Long]
+    val base = spark.range(0L, n, 1L, cpus).as[Long]
       .mapPartitions(_.map { id =>
         val h = mix(id)
         val src = if (java.lang.Long.remainderUnsigned(h, 100L) < 95L)

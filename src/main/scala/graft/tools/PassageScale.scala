@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.TextOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for the passage-dedup scale shape: synthesizes a
@@ -28,17 +27,13 @@ object PassageScale {
 
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.nonEmpty) args(0).toInt else 200000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.engine.Tables.builder("graft-passage-scale")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
-    val docs = spark.range(0L, nDocs.toLong, 1L, cpus.toInt)
+    val docs = spark.range(0L, nDocs.toLong, 1L, cpus)
       .as[Long].mapPartitions { it =>
         it.map { d =>
           val sb = new StringBuilder

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dump `explain("formatted")` for a list of queries to
   * files — the plan evidence the optimization rounds commit under
   * plans/rNN/. Usage:
@@ -16,14 +14,7 @@ object PlanDump {
     val suffix = args(2)
     val names =
       if (args.length > 3) args(3).split(',').toSeq else graft.Bench.headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-plan-dump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -1,19 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe main for local schema/plan/timing inspection. Not
   * part of the driver contract. Current use: recall@3 summary plus a
   * cold-run cost breakdown of the ANN serving stack (which index
   * build dominates a cache-cleared `q_ann_recall` rep). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     import org.apache.spark.sql.functions._

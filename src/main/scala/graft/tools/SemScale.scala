@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for the round-7 SemDeDup scale fix (the r6 64-cell
@@ -60,20 +59,15 @@ object SemScale {
 
   def main(args: Array[String]): Unit = {
     val nVecs = if (args.nonEmpty) args(0).toLong else 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-sem-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     // quantized onto the production pipeline's 1e−6 lattice (the r17
     // integer-exact path): exact copies stay cos = 1 and noise pairs
     // stay ~0 — the planted contrast is quantization-invariant
-    val e = spark.range(0L, nVecs, 1L, cpus.toInt).as[Long]
+    val e = spark.range(0L, nVecs, 1L, cpus).as[Long]
       .mapPartitions(_.map(id => (id,
         vecOf(id).map(x => math.rint(x * 1e6)).toSeq)))
       .toDF("vec_id", "v")

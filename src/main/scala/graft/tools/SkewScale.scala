@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.engine.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for [[Scale.saltedJoin]] beyond the fixture's uniform
@@ -26,16 +25,12 @@ object SkewScale {
   def main(args: Array[String]): Unit = {
     val nFact = if (args.nonEmpty) args(0).toLong else 8000000L
     val nDim = 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.engine.Tables.builder("graft-skew-scale")
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
 
     // half the fact rows hit key 0; the rest spread uniformly
     val fact = spark.range(nFact).select(

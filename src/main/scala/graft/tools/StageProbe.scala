@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -27,23 +26,8 @@ object StageProbe {
     val names =
       if (args.length > 1) args(1).split(',').toSeq else graft.Bench.headline
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf — see Tables.codegenCacheMaxEntries
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.engine.Tables.codegenCacheMaxEntries.toString)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        graft.engine.Tables.shuffleSortBypassMergeThreshold.toString)
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-stage-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
 
     val stages = mutable.LinkedHashMap.empty[Int, St]
     var jobs = 0

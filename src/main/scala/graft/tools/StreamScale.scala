@@ -280,14 +280,7 @@ object StreamScale {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("curation")) {
       val nDocs = args.lift(1).map(_.toLong).getOrElse(120000L)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-      val spark0 = SparkSession.builder()
-        .master(s"local[$cpus0]")
-        .appName("graft-stream-curation")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+      val spark0 = Tables.builder("graft-stream-curation")
         .getOrCreate()
       spark0.sparkContext.setLogLevel("ERROR")
       Tables.tune(spark0)
@@ -298,14 +291,7 @@ object StreamScale {
     if (args.headOption.contains("sustained")) {
       val rate = args.lift(1).map(_.toLong).getOrElse(10000L)
       val secs = args.lift(2).map(_.toInt).getOrElse(150)
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-      val spark0 = SparkSession.builder()
-        .master(s"local[$cpus0]")
-        .appName("graft-stream-sustained")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+      val spark0 = Tables.builder("graft-stream-sustained")
         .getOrCreate()
       spark0.sparkContext.setLogLevel("ERROR")
       Tables.tune(spark0)
@@ -316,15 +302,7 @@ object StreamScale {
     val nDocs = args.lift(0).map(_.toLong).getOrElse(120000L)
     val nEvents = args.lift(1).map(_.toLong).getOrElse(400000L)
     val nBatch = 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Tables.builder("graft-stream-scale").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.tune(spark)
     val rocks = args.lift(2).contains("rocksdb")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.engine.Scale
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev evidence for Z-order clustering ([[Scale.writeZordered]]):
@@ -32,13 +32,7 @@ import org.apache.spark.sql.functions._
 object ZorderScale {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Tables.builder("graft-zorder-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = java.nio.file.Files.createTempDirectory("zorder").toString

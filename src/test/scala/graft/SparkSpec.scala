@@ -5,13 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, one SparkContext). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+  lazy val session: SparkSession =
+    graft.engine.Tables.builder("graft-test")
       .master("local[4]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // Hive catalog (SURVEY §2.8 C1) backed by a local derby metastore
       // under target/ — needed for metastore-managed partition
       // visibility in SinksSpec (K5 commit-delay semantics).
@@ -20,17 +17,6 @@ object SparkSpec {
         "jdbc:derby:;databaseName=target/metastore_db;create=true")
       .enableHiveSupport()
       .getOrCreate()
-    // every unpartitioned window in the engine runs on an audited
-    // bounded frame (the KNOWN-BOUNDED comments at each site), so
-    // WindowExec's single-partition WARN is pure noise in test logs —
-    // same scoped silence Bench/Verify apply (a constant partition key
-    // cannot silence it: Spark 4's EliminateWindowPartitions folds it
-    // away again)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    s
-  }
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -10,7 +10,8 @@ import scala.concurrent.duration._
 
 /** The per-session LRU every engine memo is an instance of
   * ([[SessionMemo]]): LRU order, eviction hooks, per-session clear,
-  * and the build race. */
+  * and the build race; plus the source scans that keep one memo class
+  * and one session builder ([[Tables.builder]]). */
 class SessionMemoSpec extends SparkSpec {
   import spark.implicits._
 
@@ -102,5 +103,37 @@ class SessionMemoSpec extends SparkSpec {
         new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
     assert(offenders.isEmpty,
       s"session-keyed map outside SessionMemo: ${offenders.mkString(", ")}")
+  }
+
+  test("no session is built outside Tables.builder") {
+    // a session built any other way picks its own confs and so runs
+    // a different engine from the one Bench measures; the pattern is
+    // split so this file does not match it
+    val call = ("Spark" + """Session\s*\.\s*builder\b""").r
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { d =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(d)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".scala"))
+    }
+    val sites = files.flatMap { p =>
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .split('\n').toSeq.zipWithIndex.collect {
+          case (l, i) if call.findFirstIn(l).isDefined => s"$p:${i + 1}"
+        }
+    }
+    val (own, offenders) = sites.partition(
+      _.startsWith("src/main/scala/graft/engine/Tables.scala:"))
+    assert(offenders.isEmpty,
+      s"(${offenders.length} sites outside Tables.builder)")
+    assert(own.length == 1)
+  }
+
+  test("the test session carries the engine's static confs") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096")
+    assert(spark.sparkContext.getConf
+      .getInt("spark.shuffle.sort.bypassMergeThreshold", 200) == 1)
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.catalogImplementation") == "hive")
   }
 }
