@@ -76,10 +76,18 @@ object Sinks {
          |LOCATION '$location'""".stripMargin)
   }
 
+  /** The K5 table pipeline's bounded out-of-orderness: the
+    * reference's `WATERMARK ... INTERVAL '5' SECOND`
+    * (`Kafka2S3Hive.scala:70`). [[tablePipeline]] watermarks with it,
+    * and `HiveJob` subtracts it from a batch's max event time to get
+    * the watermark that batch produced. */
+  val tableWatermarkDelayMs = 5000L
+
   /** K5 data path — the reference's INSERT projection
     * (`Kafka2S3Hive.scala:114-127`): 5 physical columns + (logday,h,m)
-    * from event time, watermarked 5 s, streamed exactly-once into a
-    * STAGING directory with 3-level Hive-style partition dirs.
+    * from event time, watermarked [[tableWatermarkDelayMs]], streamed
+    * exactly-once into a STAGING directory with 3-level Hive-style
+    * partition dirs.
     *
     * Staging must not be the table's location: the streaming sink
     * leaves a `_spark_metadata` manifest, and any read of a path
@@ -94,10 +102,11 @@ object Sinks {
       checkpointDir: String): DataStreamWriter[Row] = {
     val withEt = parsed
       .withColumn("event_time", TimeOps.eventTimeFromMillis(col("timestamp")))
-      .withWatermark("event_time", "5 seconds")
+      .withWatermark("event_time", s"$tableWatermarkDelayMs milliseconds")
     // withPartitionColumns re-derives (logday,h,m) and projects the
     // insert shape; the EventTimeWatermark node stays on the plan so
-    // progress keeps reporting the watermark for the committer.
+    // progress keeps reporting the watermark and max event time that
+    // HiveJob's committer reads.
     Ingest.withPartitionColumns(withEt)
       .writeStream
       .format("parquet")
@@ -485,9 +494,12 @@ object Sinks {
   * directories under the STAGING location (where [[Sinks.tablePipeline]]
   * writes), and registers the ready ones with `ALTER TABLE ADD IF NOT
   * EXISTS PARTITION ... LOCATION '<staging dir>'` — no data movement.
-  * Call it from a `StreamingQueryListener.onQueryProgress` (watermark
-  * from `progress.eventTime`) or any scheduler. Requires a
-  * Hive-backed catalog (see [[Sinks.createPartitionedTable]]).
+  * `HiveJob` calls it from a `StreamingQueryListener.onQueryProgress`
+  * with the watermark each finished batch produced; bounded runs and
+  * schedulers may call it too. Calls are serialized (`commitReady` is
+  * `synchronized`), so a caller's final commit can overlap the
+  * listener's. Requires a Hive-backed catalog (see
+  * [[Sinks.createPartitionedTable]]).
   *
   * With `autoCompact` the reference's declared-but-dead
   * `auto-compaction` knob (`Kafka2S3Hive.scala:87-88`, a no-op on its
@@ -574,53 +586,55 @@ class PartitionCommitter(spark: SparkSession, table: String,
     * [[Sinks.reconcileLatePartition]]. Compaction/reconciliation
     * failures are logged, never propagated: the commit (correctness)
     * must not be rolled back for a failed optimization, and the next
-    * trigger retries naturally. */
-  def commitReady(watermarkMillis: Long): Seq[(String, String, String)] = {
-    val onDisk = partitionsOnDisk()
-    val fresh = onDisk.filter { case (d, h, m) =>
-      safe(d, h, m) && !committed((d, h, m)) &&
-        partitionTime(d, h, m).exists(_ + delayMillis <= watermarkMillis)
+    * trigger retries naturally. A failed catalog ADD propagates; the
+    * partition stays uncommitted and the next call retries it. */
+  def commitReady(watermarkMillis: Long): Seq[(String, String, String)] =
+    synchronized {
+      val onDisk = partitionsOnDisk()
+      val fresh = onDisk.filter { case (d, h, m) =>
+        safe(d, h, m) && !committed((d, h, m)) &&
+          partitionTime(d, h, m).exists(_ + delayMillis <= watermarkMillis)
+      }
+      fresh.foreach { case (d, h, m) =>
+        spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " +
+          s"PARTITION (logday='$d', h='$h', m='$m') " +
+          s"LOCATION '$location/logday=$d/h=$h/m=$m'")
+        committed += ((d, h, m))
+      }
+      if (autoCompact) {
+        // every committed partition still listed on disk: fresh commits
+        // (first compaction) and reappeared staging dirs (late data).
+        // After a driver restart `committed` re-fills from `fresh`, so
+        // a late dir for a long-ago-compacted partition is attended
+        // too: ADD is a no-op, reconcile merges, compact no-ops.
+        // HANDED OFF to the shared compaction worker: commitReady is
+        // called from StreamingQueryListener.onQueryProgress, and a
+        // compaction outlasting the trigger interval on the listener
+        // bus thread would back up progress-event delivery for every
+        // listener (Spark drops events once that queue fills). The DDL
+        // ADDs above stay synchronous — they are the commit itself,
+        // cheap metastore calls. Re-enqueueing a partition already in
+        // the queue is harmless: reconcile/compact no-op on re-entry.
+        onDisk.filter(p => safe(p._1, p._2, p._3) && committed(p))
+          .foreach { case (d, h, m) =>
+            val spec = Seq("logday" -> d, "h" -> h, "m" -> m)
+            PartitionCommitter.compactionExec.submit(new Runnable {
+              override def run(): Unit =
+                try {
+                  Sinks.reconcileLatePartition(spark, table, spec,
+                    s"$location/logday=$d/h=$h/m=$m", compactTargetBytes,
+                    compactRetentionMs)
+                  Sinks.compactTablePartition(spark, table, spec,
+                    compactTargetBytes, compactRetentionMs)
+                } catch { case e: Exception =>
+                  System.err.println(s"[PartitionCommitter] auto-compaction " +
+                    s"of ($d,$h,$m) failed: ${e.getMessage}")
+                }
+            })
+          }
+      }
+      fresh
     }
-    fresh.foreach { case (d, h, m) =>
-      spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " +
-        s"PARTITION (logday='$d', h='$h', m='$m') " +
-        s"LOCATION '$location/logday=$d/h=$h/m=$m'")
-      committed += ((d, h, m))
-    }
-    if (autoCompact) {
-      // every committed partition still listed on disk: fresh commits
-      // (first compaction) and reappeared staging dirs (late data).
-      // After a driver restart `committed` re-fills from `fresh`, so
-      // a late dir for a long-ago-compacted partition is attended
-      // too: ADD is a no-op, reconcile merges, compact no-ops.
-      // HANDED OFF to the shared compaction worker: commitReady is
-      // called from StreamingQueryListener.onQueryProgress, and a
-      // compaction outlasting the trigger interval on the listener
-      // bus thread would back up progress-event delivery for every
-      // listener (Spark drops events once that queue fills). The DDL
-      // ADDs above stay synchronous — they are the commit itself,
-      // cheap metastore calls. Re-enqueueing a partition already in
-      // the queue is harmless: reconcile/compact no-op on re-entry.
-      onDisk.filter(p => safe(p._1, p._2, p._3) && committed(p))
-        .foreach { case (d, h, m) =>
-          val spec = Seq("logday" -> d, "h" -> h, "m" -> m)
-          PartitionCommitter.compactionExec.submit(new Runnable {
-            override def run(): Unit =
-              try {
-                Sinks.reconcileLatePartition(spark, table, spec,
-                  s"$location/logday=$d/h=$h/m=$m", compactTargetBytes,
-                  compactRetentionMs)
-                Sinks.compactTablePartition(spark, table, spec,
-                  compactTargetBytes, compactRetentionMs)
-              } catch { case e: Exception =>
-                System.err.println(s"[PartitionCommitter] auto-compaction " +
-                  s"of ($d,$h,$m) failed: ${e.getMessage}")
-              }
-          })
-        }
-    }
-    fresh
-  }
 
   /** Block until every auto-compaction enqueued so far has run —
     * bounded-run / test hook (the worker is FIFO, so an empty barrier

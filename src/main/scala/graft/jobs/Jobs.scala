@@ -133,24 +133,91 @@ object ParquetJob {
   }
 }
 
-/** A running HiveJob: the streaming query plus its partition
-  * committer (exposed so bounded runs can drive a final commit). */
-case class HiveJobHandle(query: StreamingQuery,
-    committer: PartitionCommitter)
+/** A running HiveJob: the streaming query, its partition committer
+  * (exposed so bounded runs can drive a final commit) and the health
+  * of the commits its progress listener drives. */
+final class HiveJobHandle private[jobs] (val query: StreamingQuery,
+    val committer: PartitionCommitter, commits: HiveJob.CommitListener) {
+  /** Commit passes that failed in a row (reset by any success). */
+  def commitFailures: Int = commits.failures
+  /** The commit failure that stopped the query, once one has. */
+  def failure: Option[Throwable] = Option(commits.cause)
+}
 
 /** `Kafka2S3Hive` equivalent (`Kafka2S3Hive.scala:20-130`):
   * lenient-parsed events → 3-level-partitioned catalog table, with
   * metastore partition commit deferred until the watermark passes
-  * partition-time + delay. In continuous operation a
-  * StreamingQueryListener drives the committer from each progress
-  * event's watermark (Spark's watermark lags one micro-batch, so a
-  * partition commits on the trigger after its data arrives — same
-  * order of delay as the reference's checkpoint-coupled commit). For
-  * bounded runs (`--available-now`) the listener may never observe an
-  * advanced watermark; drive `handle.committer.commitReady` after
-  * termination instead. */
+  * partition-time + delay. A StreamingQueryListener drives the
+  * committer from each progress event with the watermark that batch
+  * PRODUCED — `max(watermark, max event time − delay)`, exactly what
+  * Spark's watermark tracker hands the next batch — so a partition
+  * commits on the trigger whose data closes it, as the reference's
+  * commit coordinator checks the current watermark at each checkpoint.
+  * An idle stream therefore strands no ready partition, and late rows
+  * still reach committed partitions through the committer's merge.
+  * Bounded runs (`--available-now`) commit the same way; a caller's
+  * final `handle.committer.commitReady` is safe alongside the
+  * listener's. After [[maxCommitFailures]] failed commit passes in a
+  * row the job stops its query and records the cause on the handle
+  * (`main` then exits non-zero): a metastore outage must not leave
+  * partitions invisible while the job looks healthy. */
 object HiveJob {
   val queryName = "graft_hive_job"
+  val maxCommitFailures = 3
+
+  /** The watermark a finished batch produced, from its progress
+    * `eventTime` map; falls back to the batch's own watermark when it
+    * reported no `max` (no rows). */
+  private[jobs] def producedWatermark(
+      eventTime: java.util.Map[String, String]): Option[Long] = {
+    def ms(key: String) = Option(eventTime.get(key))
+      .map(java.time.Instant.parse(_).toEpochMilli)
+    (ms("watermark") ++ ms("max").map(_ - Sinks.tableWatermarkDelayMs))
+      .maxOption
+  }
+
+  /** Commits on this run's progress events. Registered before
+    * `start()`, so no progress event is missed; the run's id is set in
+    * `onQueryStarted`, which Spark calls synchronously inside
+    * `start()`. Deregisters on the run's termination, so a later run
+    * in the same session never has a stale listener committing against
+    * a dropped table. */
+  private[jobs] final class CommitListener(spark: SparkSession,
+      committer: PartitionCommitter) extends StreamingQueryListener {
+    @volatile private var id: java.util.UUID = _
+    @volatile var failures = 0
+    @volatile var cause: Throwable = _
+
+    override def onQueryStarted(
+        e: StreamingQueryListener.QueryStartedEvent): Unit =
+      if (id == null && e.name == queryName) id = e.id
+    override def onQueryTerminated(
+        e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      if (e.id == id) spark.streams.removeListener(this)
+    override def onQueryProgress(
+        e: StreamingQueryListener.QueryProgressEvent): Unit =
+      if (e.progress.id == id) {
+        try {
+          producedWatermark(e.progress.eventTime).filter(_ > 0)
+            .foreach(committer.commitReady)
+          failures = 0
+        } catch { case ex: Exception => // listener must never throw
+          failures += 1
+          System.err.println(s"[HiveJob] commit failed ($failures in a " +
+            s"row): ${ex.getMessage}")
+          if (failures >= maxCommitFailures && cause == null) {
+            cause = ex
+            // stop() blocks until the query thread exits; on this
+            // thread it would stall the session's listener bus
+            val q = spark.streams.get(id)
+            val stopper = new Thread(() => if (q != null) q.stop(),
+              "graft-hive-job-stop")
+            stopper.setDaemon(true)
+            stopper.start()
+          }
+        }
+      }
+  }
 
   def run(spark: SparkSession, c: JobConfig): HiveJobHandle = {
     Sinks.createPartitionedTable(spark, c.tableName, c.tableLocation)
@@ -162,47 +229,32 @@ object HiveJob {
       c.stagingDir, c.partitionCommitDelayMs,
       autoCompact = c.autoCompaction,
       compactRetentionMs = c.compactRetentionMs)
-    val fmt = java.time.format.DateTimeFormatter.ISO_INSTANT
-    val q = Sinks.tablePipeline(
-        Ingest.parseLenient(Jobs.rawSource(spark, c)),
-        c.stagingDir, c.checkpointDir)
-      .queryName(queryName)
-      .trigger(Jobs.trigger(c)).start()
-    // Keyed on THIS run's query id (not the shared queryName) and
-    // deregistered on termination, so a second run in the same session
-    // never has a stale listener committing against a dropped table.
-    // Registered after start(): the first progress event may be missed,
-    // but commitReady is cumulative so the next trigger catches up.
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == q.id) spark.streams.removeListener(this)
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.id == q.id) {
-          try Option(e.progress.eventTime.get("watermark")).foreach { wm =>
-            val ms = java.time.Instant.from(fmt.parse(wm)).toEpochMilli
-            if (ms > 0) committer.commitReady(ms)
-          } catch { case ex: Exception => // listener must never throw
-            System.err.println(s"[HiveJob] commit failed: ${ex.getMessage}")
-          }
-        }
-    }
+    val listener = new CommitListener(spark, committer)
     spark.streams.addListener(listener)
-    // A very short run can terminate BEFORE the listener registers —
-    // its onQueryTerminated then never fires and the listener leaks
-    // into every later query. Double-removal (both this and the
-    // termination callback racing) is a harmless no-op.
-    if (!q.isActive) spark.streams.removeListener(listener)
-    HiveJobHandle(q, committer)
+    // a run that fails to start must not leave its listener behind to
+    // adopt the id of the next run with the same name
+    val q =
+      try Sinks.tablePipeline(
+          Ingest.parseLenient(Jobs.rawSource(spark, c)),
+          c.stagingDir, c.checkpointDir)
+        .queryName(queryName)
+        .trigger(Jobs.trigger(c)).start()
+      catch { case e: Exception =>
+        spark.streams.removeListener(listener)
+        throw e
+      }
+    new HiveJobHandle(q, committer, listener)
   }
 
   def main(args: Array[String]): Unit = {
     val c = JobConfig.parse(args)
     val h = run(Jobs.session("kafka2hive", hive = true), c)
     h.query.awaitTermination()
+    h.failure.foreach { e =>
+      System.err.println(s"[HiveJob] stopped after $maxCommitFailures " +
+        s"failed partition commits in a row: ${e.getMessage}")
+      sys.exit(1)
+    }
   }
 }
 

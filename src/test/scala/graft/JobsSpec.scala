@@ -14,6 +14,28 @@ class JobsSpec extends SparkSpec {
     dir
   }
 
+  /** (logday, h, m) of the minute partition holding event time `ms`. */
+  private def partitionOf(ms: Long): (String, String, String) = {
+    val t = java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
+    (t.toLocalDate.toString, f"${t.getHour}%02d", f"${t.getMinute}%02d")
+  }
+
+  private def listed(table: String): Seq[String] =
+    spark.sharedState.externalCatalog.listPartitionNames("default", table)
+
+  /** Poll the catalog (at most `limitMs`) until `table` lists the
+    * partition holding event time `ms`: the job's listener commits on
+    * the listener-bus thread, after the batch that closed it. */
+  private def awaitCommitted(table: String, ms: Long,
+      limitMs: Long = 30000L): Boolean = {
+    val (d, h, m) = partitionOf(ms)
+    val name = s"logday=$d/h=$h/m=$m"
+    val until = System.currentTimeMillis() + limitMs
+    while (!listed(table).contains(name) && System.currentTimeMillis() < until)
+      Thread.sleep(50)
+    listed(table).contains(name)
+  }
+
   private val good =
     """{"uuid":"a","date":"2021-04-13T06:23:10.593Z","timestamp":1617171790593,"ad_type":1,"ad_type_name":"x"}"""
 
@@ -62,17 +84,93 @@ class JobsSpec extends SparkSpec {
       good.replace("\"uuid\":\"a\"", "\"uuid\":\"b\"")
         .replace("1617171790593", (t0 + 600000L).toString)))
     val table = "source_log_job_test"
+    val stg = tmpDir("jstg")
     val h = HiveJob.run(spark, JobConfig(source = "file", inputDir = in,
       checkpointDir = tmpDir("jcp"), tableName = table,
-      tableLocation = tmpDir("jtbl"), stagingDir = tmpDir("jstg"),
+      tableLocation = tmpDir("jtbl"), stagingDir = stg,
       partitionCommitDelayMs = 60000L, availableNow = true))
     h.query.awaitTermination()
-    assert(spark.table(table).count() == 0) // nothing committed yet
-    // bounded-run final commit at the data-derived watermark
-    h.committer.commitReady(t0 + 600000L - 5000L)
+    // the job's listener commits at the watermark its one batch
+    // produced (max - 5s): a's partition, never b's
+    assert(awaitCommitted(table, t0))
+    // a bounded-run final commit at that watermark finds nothing new
+    assert(h.committer.commitReady(t0 + 600000L - 5000L).isEmpty)
+    val (d, hh, m) = partitionOf(t0)
+    assert(listed(table) == Seq(s"logday=$d/h=$hh/m=$m"))
     val visible = spark.table(table).collect().map(_.getAs[String]("uuid"))
     assert(visible.toSeq == Seq("a")) // b's partition still pending
+    // the rule itself: a partition commits exactly when the watermark
+    // reaches its time + delay, not a millisecond before
+    val probe = new graft.engine.PartitionCommitter(spark, table, stg, 60000L)
+    val aReady = probe.partitionTime(d, hh, m).get + 60000L
+    assert(probe.commitReady(aReady - 1).isEmpty)
+    assert(probe.commitReady(aReady) == Seq((d, hh, m)))
     spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("HiveJob: an idle stream commits the partition its last batch closed") {
+    // one file, two events 10 minutes apart, then no more input: the
+    // batch's own watermark (max - 5s) closes the first partition, and
+    // no later batch ever runs to carry a lagging watermark
+    val t0 = 1617171790000L
+    val in = writeInput(Seq(
+      good.replace("1617171790593", t0.toString),
+      good.replace("\"uuid\":\"a\"", "\"uuid\":\"b\"")
+        .replace("1617171790593", (t0 + 600000L).toString)))
+    val table = "source_log_idle_test"
+    val h = HiveJob.run(spark, JobConfig(source = "file", inputDir = in,
+      checkpointDir = tmpDir("icp"), checkpointInterval = 1L,
+      tableName = table, tableLocation = tmpDir("itbl"),
+      stagingDir = tmpDir("istg"), partitionCommitDelayMs = 60000L))
+    try {
+      assert(awaitCommitted(table, t0), "ready partition stranded")
+      Thread.sleep(3000L) // three idle triggers on: b's stays pending
+      val (d, hh, m) = partitionOf(t0)
+      assert(listed(table) == Seq(s"logday=$d/h=$hh/m=$m"))
+      assert(spark.table(table).collect()
+        .map(_.getAs[String]("uuid")).toSeq == Seq("a"))
+      assert(h.query.isActive && h.failure.isEmpty)
+    } finally {
+      h.query.stop()
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+  }
+
+  test("HiveJob: repeated commit failures stop the query and name the cause") {
+    val t0 = 1617171790000L
+    val in = tmpDir("fin")
+    val tmp = tmpDir("ftmp")
+    val table = "source_log_fault_test"
+    val h = HiveJob.run(spark, JobConfig(source = "file", inputDir = in,
+      checkpointDir = tmpDir("fcp"), checkpointInterval = 0L,
+      tableName = table, tableLocation = tmpDir("ftbl"),
+      stagingDir = tmpDir("fstg"), partitionCommitDelayMs = 60000L))
+    try {
+      // the fault: the catalog table vanishes under the running job,
+      // so every ADD PARTITION from here on fails
+      spark.sql(s"DROP TABLE $table")
+      // one file per batch, each 10 event minutes on: from the second
+      // batch on a partition is ready and its commit fails
+      def consumed = h.query.recentProgress.map(_.numInputRows).sum
+      for (k <- 0 until 6 if h.query.isActive) {
+        val f = Paths.get(tmp, s"f$k.jsonl")
+        Files.write(f, (good.replace("1617171790593",
+          (t0 + k * 600000L).toString) + "\n").getBytes("UTF-8"))
+        Files.move(f, Paths.get(in, s"f$k.jsonl"),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        val until = System.currentTimeMillis() + 30000L
+        while (consumed < k + 1 && h.query.isActive &&
+            System.currentTimeMillis() < until) Thread.sleep(50)
+      }
+      assert(h.query.awaitTermination(30000L), "query still running")
+      assert(h.query.exception.isEmpty) // stopped by the job, not crashed
+      assert(h.commitFailures >= HiveJob.maxCommitFailures)
+      assert(h.failure.exists(_.getMessage.contains(table)),
+        s"cause does not name the table: ${h.failure}")
+    } finally {
+      h.query.stop()
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
   }
 
   test("HiveJob retention grace: absorbed staging files survive until aged, then drain") {
@@ -94,10 +192,13 @@ class JobsSpec extends SparkSpec {
         partitionCommitDelayMs = 60000L, autoCompaction = true,
         compactRetentionMs = grace, availableNow = true))
       h.query.awaitTermination()
-      val committed = h.committer.commitReady(t0 + 3600000L - 5000L)
+      // the job's listener commits the partition at the watermark the
+      // batch produced; the final commit waits out that call (it is
+      // synchronized), so the compaction it queued precedes the barrier
+      assert(awaitCommitted(table, t0))
+      assert(h.committer.commitReady(t0 + 3600000L - 5000L).isEmpty)
       h.committer.awaitCompactions()
-      assert(committed.nonEmpty)
-      val (d, hh, m) = committed.head
+      val (d, hh, m) = partitionOf(t0)
       // flip happened (catalog reads the compact dir) but the absorbed
       // staging files SURVIVE the grace window for in-flight readers
       val origDir = new java.io.File(s"$stg/logday=$d/h=$hh/m=$m")
@@ -151,11 +252,14 @@ class JobsSpec extends SparkSpec {
         partitionCommitDelayMs = 60000L, autoCompaction = true,
         availableNow = true))
       h.query.awaitTermination()
-      // bounded-run final commit; auto-compaction rides the commit
-      val committed = h.committer.commitReady(t0 + 3600000L - 5000L)
+      // the job's listener commits the partition at the watermark the
+      // batch produced and auto-compaction rides that commit; the
+      // final commit waits out the listener's call (synchronized), so
+      // its compaction is queued before the barrier
+      assert(awaitCommitted(table, t0))
+      assert(h.committer.commitReady(t0 + 3600000L - 5000L).isEmpty)
       h.committer.awaitCompactions() // async worker — drain before asserting
-      assert(committed.nonEmpty)
-      val (d, hh, m) = committed.head
+      val (d, hh, m) = partitionOf(t0)
       // the original staging partition dir is gone, replaced by a
       // single-file compacted sibling the partition LOCATION points at
       val origDir = new java.io.File(s"$stg/logday=$d/h=$hh/m=$m")
